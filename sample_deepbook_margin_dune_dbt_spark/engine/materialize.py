@@ -13,19 +13,35 @@ in the environment, a table is a parquet directory and MERGE is expressed as::
     kept = old.join(new, on=unique_key, how="left_anti")   # rows not replaced
     result = kept.unionByName(new)
 
-Two physical strategies, chosen by whether the table is partitioned:
+Only the files that hold a replaced row are rewritten:
 
-1. **Partitioned tables** (e.g. a fact partitioned by ``snapshot_date``):
-   only the partitions *touched by new data* are read back and rewritten,
-   using Spark's dynamic partition overwrite. New data for 7 days out of 5
-   years rewrites 7 partitions, not the table. This is the strategy that
-   holds at 100 TB — the rewrite cost is proportional to the incremental
-   slice, not the table size. (Equivalent of Delta's MERGE file-pruning /
-   Hive dynamic-partition insert-overwrite.)
+1. **Find the touched files.** A target file is touched when it holds an
+   in-scope row whose key matches an update: one semi-join of the
+   target's key columns (plus ``_metadata.file_path``) against the
+   update keys. On a partitioned table the scan is first pruned to the
+   partitions the updates land in, so the search reads only those.
+2. **Stage once.** The touched files' surviving rows plus the updates are
+   written to a staging directory (``partitionBy`` when partitioned) —
+   the write is the size of the slice and the touched files, not the
+   table. Untouched files are never read by the write.
+3. **Publish.** The plain :class:`TableStore` moves the staged files into
+   the table directory, then deletes the touched files. This runs only
+   after the staged write completed, but it is not atomic: between the
+   first move and the last delete a reader can see both the old and the
+   new version of a replaced row, and a crash inside that window leaves
+   both behind. :class:`~.versioned.VersionedTableStore` publishes the same
+   staged files by hard-linking the untouched files into a new snapshot
+   and committing a manifest, which is atomic.
 
-2. **Unpartitioned tables**: full anti-join + atomic directory swap. Fine for
-   dimension-sized tables; incremental *fact* tables should declare
-   ``partition_by``.
+A full rewrite (stage the whole merged table, swap directories) remains
+only where a slice cannot express the change: schema-altering merges and
+a change of on-disk layout, e.g. the upgrade of a table created empty to
+its declared partitioned layout.
+
+Incremental probes (``ModelContext.watermark_ms``/``lookback_floor_date``)
+and source pruning (``ModelContext.source(..., since_ms=...)``) read the
+parquet footers' min/max statistics through :func:`footer_bounds`, so
+their cost is O(files), not O(rows).
 
 On a cluster with Delta/Iceberg available, ``TableStore`` is the single seam
 to swap: ``merge`` becomes ``MERGE INTO target USING updates ON <keys> WHEN
@@ -37,13 +53,166 @@ post-hooks ``macros/dune_dbt_overrides/optimize_table.sql:3``,
 
 from __future__ import annotations
 
+import contextlib
+import datetime as dt
+import json
 import os
+import re
 import shutil
 import time
 import uuid
+from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _visible(entry: str) -> bool:
+    """Spark's rule for the directory entries a table read sees: hidden
+    (``.``) and ``_``-prefixed names are skipped, except ``_``-prefixed
+    partition directories (``_c=v``)."""
+    return not (
+        entry.startswith(".")
+        or (entry.startswith("_") and "=" not in entry)
+        or entry.endswith("._COPYING_")
+    )
+
+
+def data_files(root: str | None) -> list[str]:
+    """Absolute paths of the files a Spark read of ``root`` would scan."""
+    if root is None or not os.path.exists(root):
+        return []
+    root = os.path.abspath(root)
+    if os.path.isfile(root):
+        return [root]
+    out = []
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if _visible(d)]
+        out.extend(os.path.join(dirpath, f) for f in files if _visible(f))
+    return sorted(out)
+
+
+def _typed_partition_values(raw: list[str | None]) -> list | None:
+    """Type Hive ``col=value`` strings the way Spark's partition inference
+    does for the two types trusted here (integers, ISO dates); None when
+    the values are neither."""
+    vals = [v for v in raw if v is not None]
+    if all(re.fullmatch(r"-?\d+", v) for v in vals):
+        return [None if v is None else int(v) for v in raw]
+    if all(re.fullmatch(r"\d{4}-\d{2}-\d{2}", v) for v in vals):
+        return [None if v is None else dt.date.fromisoformat(v) for v in raw]
+    return None
+
+
+def _footer_column_bounds(path: str, column: str) -> tuple | None:
+    """(min, max) of one data column of one parquet file from its footer
+    statistics, (None, None) when every value is NULL, None when the
+    footer cannot answer (no statistics, or a type other than a signed
+    integer or a date)."""
+    md = pq.read_metadata(path)
+    idx = [md.schema.column(i).path for i in range(md.num_columns)]
+    if column not in idx:
+        return None
+    i = idx.index(column)
+    col = md.schema.column(i)
+    logical = json.loads(col.logical_type.to_json())
+    if col.physical_type not in ("INT32", "INT64") or logical["Type"] not in (
+        "None", "Int", "Date"
+    ) or not logical.get("isSigned", True):
+        return None
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        if rg.num_rows == 0:
+            continue
+        st = rg.column(i).statistics
+        if st is None:
+            return None
+        if st.has_min_max:
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        elif not (st.has_null_count and st.null_count == rg.num_rows):
+            return None
+    return lo, hi
+
+
+def footer_bounds(files: list[str], column: str, root: str) -> tuple | None:
+    """``(min, max)`` of ``column`` over ``files`` (absolute paths under
+    the table or source directory ``root``) from file metadata alone:
+    Hive ``column=value`` directory names when ``column`` is a partition
+    column, the parquet footers' min/max statistics otherwise. Reads
+    O(files) footers and no rows.
+
+    Returns ``(None, None)`` when no file holds a non-NULL value (an empty
+    table, an all-NULL column), and None when the metadata cannot answer
+    — a file without statistics, a column type other than a signed
+    integer or a date, partition values that are neither — so the caller
+    falls back to a Spark aggregate.
+    """
+    seg = re.compile(rf"(?:^|{re.escape(os.sep)}){re.escape(column)}=([^{re.escape(os.sep)}]*)")
+    raw = []
+    lo = hi = None
+    for f in files:
+        m = seg.search(os.path.relpath(os.path.dirname(f), root))
+        if m is None:
+            b = _footer_column_bounds(f, column)
+            if b is None:
+                return None
+            if b[1] is not None:
+                lo = b[0] if lo is None else min(lo, b[0])
+                hi = b[1] if hi is None else max(hi, b[1])
+        elif pq.read_metadata(f).num_rows:
+            v = unquote(m.group(1))
+            raw.append(None if v == _HIVE_NULL else v)
+    if raw:
+        if lo is not None:  # a column both in paths and in files: not a layout Spark writes
+            return None
+        typed = _typed_partition_values(raw)
+        if typed is None:
+            return None
+        vals = [v for v in typed if v is not None]
+        return (min(vals), max(vals)) if vals else (None, None)
+    return lo, hi
+
+
+def _local_path(uri: str) -> str:
+    """A ``_metadata.file_path`` URI as an absolute local path."""
+    u = urlparse(uri)
+    return os.path.abspath(unquote(u.path)) if u.scheme in ("", "file") else uri
+
+
+def _remove_file(path: str) -> None:
+    """Delete a data file and the Hadoop checksum Spark wrote beside it."""
+    os.remove(path)
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc"))
+
+
+def _sink_stats(files_rewritten: int, added: list[str]) -> dict:
+    """What a sink wrote, from the new files' footers."""
+    return {
+        "files_rewritten": files_rewritten,
+        "files_added": len(added),
+        "rows_written": sum(pq.read_metadata(f).num_rows for f in added),
+    }
+
+
+def _write_table(df: DataFrame, path: str, partition_by: list[str] | None) -> None:
+    """Write ``df`` as a complete table directory. A partitioned write of
+    zero rows produces no data file (no partition dir, no schema); only
+    then one empty, schema-bearing unpartitioned file is written instead,
+    so the table stays readable. ``merge`` upgrades it to the partitioned
+    layout on its first non-empty write."""
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    if partition_by and not data_files(path):
+        spark = df.sparkSession
+        spark.createDataFrame([], df.schema).write.mode("overwrite").parquet(path)
 
 
 def _split_merge_scope(
@@ -70,13 +239,12 @@ def _touched_partition_predicate(touched_rows, partition_by: list[str]) -> F.Col
 
     Uses NULL-SAFE equality (``<=>``): a NULL partition value lands in
     Hive's ``__HIVE_DEFAULT_PARTITION__`` directory and must select that
-    partition's existing rows into the merge slice — plain ``=`` never
-    matches NULL, which would exclude the null partition from the
-    old-slice read while the new snapshot still overwrites (or, in the
-    versioned store, skip-links) its directory, silently dropping every
-    non-updated key there (ADVICE r10). Catalyst prunes partitions on
-    ``EqualNullSafe`` the same as on ``EqualTo``, so the predicate still
-    reaches the scan as partition pruning.
+    partition's existing rows into the touched-file search — plain ``=``
+    never matches NULL, so a replaced row there would never be found and
+    its old version would survive beside the update (ADVICE r10).
+    Catalyst prunes partitions on ``EqualNullSafe`` the same as on
+    ``EqualTo``, so the predicate still reaches the scan as partition
+    pruning.
     """
     pred = None
     for row in touched_rows:
@@ -122,13 +290,20 @@ class TableStore:
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.path(name))
 
-    # ------------------------------------------------------------------ sinks
+    def _data_dir(self, name: str) -> str | None:
+        """The directory holding the table's current files."""
+        return self.path(name)
 
-    def _has_partition_dirs(self, name: str) -> bool:
-        p = self.path(name)
-        return os.path.isdir(p) and any(
-            "=" in f and os.path.isdir(os.path.join(p, f)) for f in os.listdir(p)
-        )
+    def data_files(self, name: str) -> list[str]:
+        """Absolute paths of the table's current data files."""
+        return data_files(self._data_dir(name))
+
+    def column_bounds(self, name: str, column: str) -> tuple | None:
+        """``(min, max)`` of ``column`` from the table's file metadata, or
+        None when it cannot answer (see :func:`footer_bounds`)."""
+        return footer_bounds(self.data_files(name), column, self._data_dir(name))
+
+    # ------------------------------------------------------------------ sinks
 
     def write_full(
         self,
@@ -136,12 +311,13 @@ class TableStore:
         name: str,
         partition_by: list[str] | None = None,
         op: str = "overwrite",
-    ) -> None:
+    ) -> dict:
         """CREATE TABLE AS (first run / full refresh; SURVEY §2.1 S7, C8).
 
-        Writes to a staging dir then atomically swaps, so a failed job never
-        leaves a half-written table (the reference gets this from Trino CTAS
-        atomicity).
+        Writes the whole table to a staging dir, then replaces the table
+        directory with it; a failed write job leaves the old table in
+        place. The replace (remove the old directory, rename the staged
+        one) is not atomic: a crash between the two leaves no table.
 
         ``op`` labels what the full rewrite IS semantically ("merge",
         "replace_scope", "optimize", …); the plain store ignores it, the
@@ -149,22 +325,17 @@ class TableStore:
         can distinguish a MERGE that took the full-rewrite path from a
         user full refresh (ADVICE r10).
 
-        Empty-input edge: a *partitioned* write of zero rows produces no
-        files at all (no partition dirs, no schema), which would leave a
-        schema-less unreadable table. Zero-row inputs are therefore written
-        unpartitioned — one empty, schema-bearing parquet file — and the
-        table upgrades to the partitioned layout on the first non-empty
-        write (``merge`` detects the actual layout on disk).
+        Empty input: see :func:`_write_table`. Returns the sink counters
+        (``files_rewritten``, ``files_added``, ``rows_written``).
         """
         staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
-        writer = df.write.mode("overwrite")
-        if partition_by and not df.isEmpty():
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
+        _write_table(df, staging, partition_by)
+        stats = _sink_stats(len(self.data_files(name)), data_files(staging))
         final = self.path(name)
         if os.path.isdir(final):
             shutil.rmtree(final)
         os.replace(staging, final)
+        return stats
 
     def append(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
         """Pure insert-append incremental (SURVEY §2.1 S8)."""
@@ -181,7 +352,7 @@ class TableStore:
         partition_by: list[str] | None = None,
         on_schema_change: str = "ignore",
         incremental_predicates: list[str] | None = None,
-    ) -> None:
+    ) -> dict:
         """Upsert ``updates`` into table ``name`` on ``unique_key`` (S6).
 
         ``incremental_predicates`` (dbt's config of the same name) bound
@@ -210,13 +381,23 @@ class TableStore:
         (full two-way sync — the one mode where a column missing from
         ``updates`` is legal); ``'fail'`` raises on any new column. Under
         every other mode a column MISSING from ``updates`` errors, as in
-        dbt. A schema-altering merge always takes the full-rewrite path,
-        even on partitioned tables — rewriting only the touched
-        partitions would leave the directory with mixed file schemas,
-        and a plain parquet read samples one footer (silently dropping
-        the new column for readers without ``mergeSchema``). A lake
-        format with real schema metadata (the Delta seam) alters without
-        the rewrite.
+        dbt. A schema-altering merge always takes the full-rewrite path —
+        rewriting only the touched files would leave the directory with
+        mixed file schemas, and a plain parquet read samples one footer
+        (silently dropping the new column for readers without
+        ``mergeSchema``). A lake format with real schema metadata (the
+        Delta seam) alters without the rewrite. So does a merge whose
+        declared ``partition_by`` differs from the layout on disk (the
+        upgrade of a table created empty). Every other merge rewrites
+        only the touched files (module docstring).
+
+        On a partitioned table a key matches only within the partitions
+        the updates land in (the scan is pruned to them), so the
+        partition columns should be part of ``unique_key``.
+
+        Returns the sink counters: ``files_rewritten`` (target files
+        replaced), ``files_added`` and ``rows_written`` (from the new
+        files' footers).
         """
         modes = ("ignore", "append_new_columns", "fail", "sync_all_columns")
         if on_schema_change not in modes:
@@ -226,12 +407,11 @@ class TableStore:
                 f"expected one of {modes}"
             )
         if not self.exists(name):
-            self.write_full(updates, name, partition_by)
-            return
+            return self.write_full(updates, name, partition_by)
 
-        old0 = self.read(name)
+        old = self.read(name)
         new_fields = [
-            f for f in updates.schema.fields if f.name not in set(old0.columns)
+            f for f in updates.schema.fields if f.name not in set(old.columns)
         ]
         if new_fields and on_schema_change == "fail":
             raise ValueError(
@@ -240,7 +420,7 @@ class TableStore:
             )
         sync = on_schema_change == "sync_all_columns"
         gone_cols = (
-            [c for c in old0.columns if c not in set(updates.columns)] if sync else []
+            [c for c in old.columns if c not in set(updates.columns)] if sync else []
         )
         if any(k in gone_cols for k in unique_key):
             raise ValueError(
@@ -251,29 +431,105 @@ class TableStore:
             "append_new_columns",
             "sync_all_columns",
         )
-        altering = widen or bool(gone_cols)
-
-        if partition_by and self._has_partition_dirs(name) and not altering:
-            self._merge_partitioned(
+        if not (widen or gone_cols) and self.partition_cols(name) == list(
+            partition_by or []
+        ):
+            return self._merge_files(
                 updates, name, unique_key, partition_by, incremental_predicates
             )
-        else:
-            # unpartitioned layout (incl. a table created empty that now
-            # receives its first real rows) or a schema-altering merge:
-            # full rewrite, upgrading to the partitioned layout when declared
-            old = old0.drop(*gone_cols) if gone_cols else old0
-            if widen:
-                for f in new_fields:
-                    old = old.withColumn(f.name, F.lit(None).cast(f.dataType))
-            old, out_scope = _split_merge_scope(old, incremental_predicates)
-            kept = old.join(updates.select(*unique_key).distinct(), on=unique_key, how="left_anti")
-            result = kept.unionByName(updates.select(*old.columns))
-            if out_scope is not None:
-                result = out_scope.unionByName(result)
-            # full rewrite; write_full stages then swaps, so the result
-            # (which reads the current table files) materializes before
-            # the old directory is replaced
-            self.write_full(result, name, partition_by, op="merge")
+        # a schema-altering merge or a layout change (incl. a table created
+        # empty that now receives its first real rows): full rewrite, into
+        # the declared layout
+        old = old.drop(*gone_cols)
+        if widen:
+            for f in new_fields:
+                old = old.withColumn(f.name, F.lit(None).cast(f.dataType))
+        old, out_scope = _split_merge_scope(old, incremental_predicates)
+        kept = old.join(updates.select(*unique_key).distinct(), on=unique_key, how="left_anti")
+        result = kept.unionByName(updates.select(*old.columns))
+        if out_scope is not None:
+            result = out_scope.unionByName(result)
+        # write_full stages the result (which reads the current table
+        # files) completely before the old directory is replaced
+        return self.write_full(result, name, partition_by, op="merge")
+
+    def _merge_files(
+        self,
+        updates: DataFrame,
+        name: str,
+        unique_key: list[str],
+        partition_by: list[str] | None,
+        incremental_predicates: list[str] | None,
+    ) -> dict:
+        """Touched-file MERGE (module docstring): find the files holding
+        an in-scope row whose key matches an update, stage their
+        surviving rows plus the updates once, publish."""
+        unchanged = {"files_rewritten": 0, "files_added": 0, "rows_written": 0}
+        # the slice feeds the touched-file search and the staged write;
+        # evaluate the model's plan once
+        updates = updates.persist()
+        try:
+            old = self.read(name)
+            if partition_by:
+                parts = updates.select(*partition_by).distinct().collect()
+                if not parts:
+                    return unchanged
+                old = old.filter(_touched_partition_predicate(parts, partition_by))
+            elif updates.isEmpty():
+                return unchanged
+            keys = updates.select(*unique_key).distinct()
+            in_scope, _ = _split_merge_scope(old, incremental_predicates)
+            touched = sorted(
+                {
+                    _local_path(r[0])
+                    for r in in_scope.select(
+                        *unique_key, F.col("_metadata.file_path").alias("_file")
+                    )
+                    .join(keys, on=unique_key, how="left_semi")
+                    .select("_file")
+                    .distinct()
+                    .collect()
+                }
+            )
+            result = updates.select(*old.columns)
+            if touched:
+                rows = (
+                    self.spark.read.schema(old.schema)
+                    .option("basePath", self._data_dir(name))
+                    .parquet(*touched)
+                )
+                rows_in, rows_out = _split_merge_scope(rows, incremental_predicates)
+                result = rows_in.join(keys, on=unique_key, how="left_anti").unionByName(result)
+                if rows_out is not None:
+                    result = rows_out.unionByName(result)
+            return self._publish(name, result, partition_by, touched)
+        finally:
+            updates.unpersist()
+
+    def _publish(
+        self,
+        name: str,
+        staged: DataFrame,
+        partition_by: list[str] | None,
+        touched: list[str],
+    ) -> dict:
+        """Write ``staged`` to a staging dir, move its files into the
+        table, then delete the ``touched`` files they replace. The moves
+        start only after the write job completed; the window between the
+        first move and the last delete is not atomic (module docstring)."""
+        staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
+        _write_table(staged, staging, partition_by)
+        added = data_files(staging)
+        stats = _sink_stats(len(touched), added)
+        table = os.path.abspath(self.path(name))
+        for f in added:
+            dst = os.path.join(table, os.path.relpath(f, staging))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(f, dst)
+        for f in touched:
+            _remove_file(f)
+        shutil.rmtree(staging)
+        return stats
 
     def replace_scope(
         self,
@@ -332,8 +588,9 @@ class TableStore:
         if not self.exists(name):
             self.write_full(updates, name, partition_by)
             return
-        # same data-loss guard as the partitioned MERGE: only DYNAMIC
-        # mode scopes the overwrite to the partitions actually written
+        # only DYNAMIC mode scopes the overwrite to the partitions
+        # actually written; Spark's default (STATIC) would delete every
+        # other partition, so pin it rather than trust the session
         self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (
             updates.write.mode("overwrite")
@@ -341,80 +598,24 @@ class TableStore:
             .parquet(self.path(name))
         )
 
-    def _merge_partitioned(
-        self,
-        updates: DataFrame,
-        name: str,
-        unique_key: list[str],
-        partition_by: list[str],
-        incremental_predicates: list[str] | None = None,
-    ) -> None:
-        """Partition-pruned upsert: rewrite only partitions present in ``updates``.
-
-        1. Collect the (small) set of touched partition values from the
-           incremental slice — bounded by the lookback window, never by table
-           size.
-        2. Read ONLY those partitions of the existing table (partition
-           pruning via filter on partition columns).
-        3. Anti-join old-slice against new keys, union with new rows.
-        4. ``INSERT OVERWRITE`` with dynamic partition overwrite — untouched
-           partitions are not rewritten.
-        """
-        updates = updates.persist()
-        touched = updates.select(*partition_by).distinct().collect()
-        if not touched:
-            updates.unpersist()
-            return
-        pred = _touched_partition_predicate(touched, partition_by)
-
-        old_slice = self.read(name).filter(pred)
-        old_slice, out_scope = _split_merge_scope(old_slice, incremental_predicates)
-        kept = old_slice.join(
-            updates.select(*unique_key).distinct(), on=unique_key, how="left_anti"
-        )
-        result = kept.unionByName(updates.select(*old_slice.columns))
-        if out_scope is not None:
-            result = out_scope.unionByName(result)
-        # Dynamic partition overwrite can't read and overwrite the same files in
-        # one job; stage the merged slice first (slice-sized, not table-sized).
-        staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
-        result.write.mode("overwrite").parquet(staging)
-        merged_slice = self.spark.read.parquet(staging)
-        # The overwrite below is only partition-scoped under DYNAMIC
-        # partition-overwrite; Spark's default is STATIC, under which this
-        # write would silently DELETE every untouched partition. get_spark()
-        # sets the conf, but TableStore must not trust its session's
-        # provenance — pin it here (runtime-settable) so a caller-supplied
-        # vanilla session can't turn an incremental merge into data loss.
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            merged_slice.write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(self.path(name))
-        )
-        shutil.rmtree(staging)
-        updates.unpersist()
-
     # ------------------------------------------------------------ maintenance
 
     def file_count(self, name: str) -> int:
         """Number of data files in the table (walked from the directory —
         no Spark job, no RDD conversion)."""
-        total = 0
-        for _root, _dirs, files in os.walk(self.path(name)):
-            total += sum(1 for f in files if f.endswith(".parquet"))
-        return total
+        return len(self.data_files(name))
 
     def partition_cols(self, name: str) -> list[str]:
         """Partition columns inferred from the on-disk ``col=value`` layout."""
         cols: list[str] = []
-        p = self.path(name)
-        while True:
+        p = self._data_dir(name)
+        while p is not None and os.path.isdir(p):
             subs = [f for f in os.listdir(p) if "=" in f and os.path.isdir(os.path.join(p, f))]
             if not subs:
-                return cols
+                break
             cols.append(subs[0].split("=")[0])
             p = os.path.join(p, subs[0])
+        return cols
 
     def optimize(
         self,

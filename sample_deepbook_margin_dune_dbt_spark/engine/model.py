@@ -19,14 +19,15 @@ Maps the reference's control-plane operators (SURVEY §2.9) onto plain Python:
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
-from datetime import datetime, timedelta, timezone
+from datetime import date, datetime, timedelta, timezone
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .materialize import TableStore
+from .materialize import TableStore, data_files, footer_bounds
 
 
 @dataclass
@@ -403,23 +404,47 @@ class ModelContext:
         # predecessor instead of NULL. 0 (default) reproduces the
         # reference's incremental behavior exactly.
         self.lag_widen_days = lag_widen_days
+        #: what the incremental probes answered (recorded in run_results)
+        self.probes: dict[str, object] = {}
 
     # --------------------------------------------------------------- dbt-isms
 
-    def source(self, database: str, table: str) -> DataFrame:
+    def source(
+        self, database: str, table: str, since_ms: int | None = None
+    ) -> DataFrame:
+        """The source table; with ``since_ms``, only its rows with
+        ``timestamp_ms >= since_ms`` (the watermark or backfill bound).
+        The bound also prunes whole files: a parquet source directory is
+        read only from the files whose footer max of ``timestamp_ms``
+        reaches it (:func:`~.materialize.footer_bounds`; a file whose
+        footer cannot answer is kept)."""
         key = f"{database}.{table}"
         if key not in self._sources:
             raise KeyError(f"source {key!r} not registered (have: {sorted(self._sources)})")
         spec = self._sources[key]
-        if isinstance(spec, str):  # plain parquet path (the common case)
-            return self.spark.read.parquet(spec)
-        # SourceCatalog-style spec: {"path", "format", "schema", "options"}
-        reader = self.spark.read.format(spec.get("format", "parquet")).options(
-            **spec.get("options", {})
-        )
+        # a plain parquet path (the common case) or a SourceCatalog-style
+        # spec: {"path", "format", "schema", "options"}
+        if isinstance(spec, str):
+            spec = {"path": spec}
+        fmt = spec.get("format", "parquet")
+        reader = self.spark.read.format(fmt).options(**spec.get("options", {}))
         if spec.get("schema"):
             reader = reader.schema(spec["schema"])
-        return reader.load(spec["path"])
+        path = spec["path"]
+        if since_ms is None:
+            return reader.load(path)
+        files = data_files(path) if fmt == "parquet" and os.path.isdir(path) else []
+        keep = [
+            f for f in files
+            if (b := footer_bounds([f], "timestamp_ms", path)) is None
+            or (b[1] is not None and b[1] >= since_ms)
+        ]
+        if files and len(keep) < len(files):
+            # no file reaching the bound still needs one to carry the schema
+            df = reader.option("basePath", path).load(keep or files[-1:])
+        else:
+            df = reader.load(path)
+        return df.filter(F.col("timestamp_ms") >= F.lit(since_ms))
 
     def ref(
         self,
@@ -478,14 +503,27 @@ class ModelContext:
 
     # ------------------------------------------------- incremental predicates
 
+    def _this_bounds(self, column: str) -> tuple | None:
+        """(min, max) of ``column`` over ``this`` from file metadata, or
+        None when it cannot answer."""
+        return self.store.column_bounds(self.current.name, column)
+
     def watermark_ms(self, column: str = "timestamp_ms") -> int:
         """``select coalesce(max(col), 0) from {{ this }}`` (SURVEY §2.2 P4/A2).
 
-        A scalar aggregate over the target — one column scanned, footer-level
-        min/max at parquet/Delta level make this cheap even on huge tables.
+        Answered from the target's parquet footer statistics (O(files), no
+        Spark job) when every file carries integer min/max statistics for
+        ``column``; otherwise — a file without statistics, a non-integer
+        column — it falls back to the Spark ``max`` aggregate over ``this``.
         """
-        row = self.this().agg(F.max(F.col(column)).alias("wm")).first()
-        return int(row["wm"]) if row["wm"] is not None else 0
+        b = self._this_bounds(column)
+        if b is not None and (b[1] is None or isinstance(b[1], int)):
+            wm = b[1]
+        else:
+            wm = self.this().agg(F.max(F.col(column)).alias("wm")).first()["wm"]
+        wm = int(wm) if wm is not None else 0
+        self.probes["watermark_ms"] = wm
+        return wm
 
     def backfill_floor_ms(self) -> int:
         """First-run bound: ``to_unixtime(now() - interval '30' day) * 1000``
@@ -494,13 +532,20 @@ class ModelContext:
 
     def lookback_floor_date(self, date_column: str = "snapshot_date"):
         """``select date_add('day', -7, max(snapshot_date)) from {{ this }}``
-        (SURVEY §2.2 P6). Returns a python date or None when target is empty."""
-        row = (
-            self.this()
-            .agg(F.date_sub(F.max(F.col(date_column)), self.lookback_days).alias("floor"))
-            .first()
-        )
-        return row["floor"]
+        (SURVEY §2.2 P6). Returns a python date or None when target is empty.
+        Footer-answered for a DATE column (or a date partition column),
+        with the same Spark-aggregate fallback as :meth:`watermark_ms`."""
+        b = self._this_bounds(date_column)
+        if b is not None and (b[1] is None or type(b[1]) is date):
+            floor = b[1] - timedelta(days=self.lookback_days) if b[1] is not None else None
+        else:
+            floor = (
+                self.this()
+                .agg(F.date_sub(F.max(F.col(date_column)), self.lookback_days).alias("floor"))
+                .first()["floor"]
+            )
+        self.probes["lookback_floor_date"] = floor.isoformat() if floor else None
+        return floor
 
     def lag_input_floor_date(self, floor_date):
         """The widened input bound for lag()-bearing incremental models:

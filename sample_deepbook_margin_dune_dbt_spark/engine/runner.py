@@ -501,7 +501,7 @@ class Runner:
 
         t0 = _time.perf_counter()
         try:
-            self._build_one(cfg, full_refresh)
+            recorded = self._build_one(cfg, full_refresh)
         except Exception as e:  # record, then surface
             self.last_run_results.append(
                 {
@@ -521,6 +521,7 @@ class Runner:
                 "execution_time_s": round(_time.perf_counter() - t0, 3),
                 "strategy": cfg.incremental_strategy,
                 "materialized": cfg.materialized,
+                **recorded,
             }
         )
 
@@ -554,7 +555,11 @@ class Runner:
             # recorded form
             json.dump(payload, f, indent=1, default=str)
 
-    def _build_one(self, cfg: ModelConfig, full_refresh: bool) -> None:
+    def _build_one(self, cfg: ModelConfig, full_refresh: bool) -> dict:
+        """Build and materialize one model; returns what its run-results
+        row records beyond the outcome: the probed watermark / lookback
+        floor, and the sink counters (``files_rewritten``,
+        ``files_added``, ``rows_written``) of a MERGE or full write."""
         ctx = ModelContext(
             self.spark,
             self.store,
@@ -590,7 +595,7 @@ class Runner:
                 invalidate_hard_deletes=cfg.invalidate_hard_deletes,
             )
             self._post_hooks(cfg)
-            return
+            return dict(ctx.probes)
         incremental_run = (
             cfg.materialized == "incremental"
             and ctx.store.exists(cfg.name)
@@ -605,13 +610,14 @@ class Runner:
             # slice against the already-appended store — appending a
             # wrong/empty slice and silently desyncing mirror from store
             df = df.localCheckpoint(eager=True)
+        sink = None
         if incremental_run:
             if cfg.incremental_strategy == "append":
                 self.store.append(df, cfg.name, cfg.partition_by)
             elif cfg.incremental_strategy == "insert_overwrite":
                 self.store.insert_overwrite(df, cfg.name, cfg.partition_by)
             else:
-                self.store.merge(
+                sink = self.store.merge(
                     df,
                     cfg.name,
                     cfg.unique_key,
@@ -620,7 +626,7 @@ class Runner:
                     incremental_predicates=cfg.incremental_predicates,
                 )
         else:
-            self.store.write_full(df, cfg.name, cfg.partition_by)
+            sink = self.store.write_full(df, cfg.name, cfg.partition_by)
         if cfg.bucket_by:
             # the mirror append is only content-correct for the 'append'
             # strategy — merge/insert_overwrite update or replace store
@@ -634,6 +640,7 @@ class Runner:
                 and cfg.incremental_strategy == "append",
             )
         self._post_hooks(cfg)
+        return {**ctx.probes, **(sink or {})}
 
     def _sync_bucketed_mirror(
         self, cfg: ModelConfig, df: DataFrame, incremental_append: bool

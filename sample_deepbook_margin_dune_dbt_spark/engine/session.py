@@ -14,9 +14,10 @@ Centralizes the configuration that the rest of the engine depends on:
 - **AQE on** (+ skew join) — runtime re-planning; at 100 TB this converts
   skewed shuffle joins into split subjoins and coalesces tiny post-shuffle
   partitions without manual tuning.
-- **Dynamic partition overwrite** — the incremental MERGE sink rewrites only
-  the partitions touched by new data (see ``materialize.py``); at cluster
-  scale this is the difference between rewriting 100 TB and rewriting one day.
+- **Dynamic partition overwrite** — the ``insert_overwrite`` sink replaces
+  only the partitions present in its input (see ``materialize.py``); at
+  cluster scale this is the difference between rewriting 100 TB and
+  rewriting one day.
 - **Arrow** — every pandas interchange (Pandas UDFs in
   ``operators/multimodal.py``, ``applyInPandas``) is Arrow-batched.
 """
@@ -36,11 +37,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster leave it unset and submit through spark-submit/YARN/K8s — every
-    other config below is cluster-safe.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally, and to
+    every core of the host when the variable is unset; on a real cluster
+    leave it unset and submit through spark-submit/YARN/K8s — every other
+    config below is cluster-safe.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .materialize import TableStore
 from .model import ModelContext, get_model
@@ -117,11 +118,20 @@ class _MockedContext(ModelContext):
             )
         return self._mock(f"ref:{name}")
 
-    def source(self, database: str, table: str) -> DataFrame:
-        return self._mock(f"source:{database}.{table}")
+    def source(
+        self, database: str, table: str, since_ms: int | None = None
+    ) -> DataFrame:
+        df = self._mock(f"source:{database}.{table}")
+        if since_ms is None:
+            return df
+        return df.filter(F.col("timestamp_ms") >= F.lit(since_ms))
 
     def this(self) -> DataFrame:
         return self._mock("this")
+
+    def _this_bounds(self, column: str) -> None:
+        # no files behind the mock: the probes aggregate over mocked `this`
+        return None
 
     def is_incremental(self) -> bool:
         return self._ut.incremental

@@ -34,14 +34,16 @@ crash mid-write leaves an orphan snapshot that no manifest references
 never disturbed because N's files are immutable until vacuum expires them.
 
 **Incremental cost stays incremental.** A naive versioned store would
-rewrite the full table per commit. Instead, partition-pruned MERGE /
-insert_overwrite / append commits write ONLY the touched slice and
-**hard-link** every untouched file from the previous snapshot into the new
-one — the local-filesystem analog of Delta's manifest reusing unchanged
-data files (metadata-only, no data copy; vacuum of an old version just
-drops link counts). Touched partitions are identified from what Spark
-actually wrote into the new snapshot (same encoder both sides), never by
-re-encoding partition values in Python.
+rewrite the full table per commit. Instead, MERGE / insert_overwrite /
+append commits write ONLY the new files and **hard-link** every untouched
+file from the previous snapshot into the new one — the local-filesystem
+analog of Delta's manifest reusing unchanged data files (metadata-only,
+no data copy; vacuum of an old version just drops link counts). MERGE
+runs the plain store's touched-file algorithm (``materialize.py``) and
+differs only in its publish step; insert_overwrite identifies the
+replaced partitions from what Spark actually wrote into the new snapshot
+(same encoder both sides), never by re-encoding partition values in
+Python.
 
 Single-writer per table is the contract, as in dbt (the reference's runs
 are serialized by the dbt scheduler) — and it is SELF-ENFORCING: every
@@ -65,7 +67,7 @@ import time
 
 from pyspark.sql import DataFrame
 
-from .materialize import TableStore, _split_merge_scope, _touched_partition_predicate
+from .materialize import TableStore, _sink_stats, _write_table, data_files
 
 _VDIR = "_v"
 _SNAP = "snap-"
@@ -263,20 +265,13 @@ class VersionedTableStore(TableStore):
         return rel, absdir
 
     @staticmethod
-    def _link_tree(src: str, dst: str, skip_partition_dirs: set[str]) -> None:
-        """Hard-link every parquet file under ``src`` into ``dst``,
-        preserving the relative (partition) layout, skipping files whose
-        partition subpath is in ``skip_partition_dirs``."""
-        for root, _dirs, files in os.walk(src):
-            rel = os.path.relpath(root, src)
-            rel = "" if rel == "." else rel
-            if rel in skip_partition_dirs:
-                continue
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                os.makedirs(os.path.join(dst, rel), exist_ok=True)
-                os.link(os.path.join(root, f), os.path.join(dst, rel, f))
+    def _link_files(files: list[str], src: str, dst: str) -> None:
+        """Hard-link ``files`` (under ``src``) into ``dst``, preserving
+        their relative (partition) layout — metadata only, no data copy."""
+        for f in files:
+            target = os.path.join(dst, os.path.relpath(f, src))
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            os.link(f, target)
 
     @staticmethod
     def _partition_subdirs(snap: str) -> set[str]:
@@ -297,7 +292,7 @@ class VersionedTableStore(TableStore):
         name: str,
         partition_by: list[str] | None = None,
         op: str = "overwrite",
-    ) -> None:
+    ) -> dict:
         """CREATE TABLE AS / full refresh → a fresh full snapshot. The
         result may read the table's current files; they are immutable, so
         the write streams directly into the new snapshot dir (no staging
@@ -306,12 +301,12 @@ class VersionedTableStore(TableStore):
         through the full-rewrite path pass their own label so the version
         history distinguishes them from a user full refresh (ADVICE r10)."""
         with self._write_lock(name):
+            n_old = len(self.data_files(name))
             rel, snap = self._new_snap(name)
-            writer = df.write.mode("overwrite")
-            if partition_by and not df.isEmpty():
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(snap)
+            _write_table(df, snap, partition_by)
+            stats = _sink_stats(n_old, data_files(snap))
             self._commit(name, rel, op)
+            return stats
 
     def append(
         self, df: DataFrame, name: str, partition_by: list[str] | None = None
@@ -328,7 +323,7 @@ class VersionedTableStore(TableStore):
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(snap)
-            self._link_tree(prev, snap, skip_partition_dirs=set())
+            self._link_files(data_files(prev), prev, snap)
             self._commit(name, rel, "append")
 
     def insert_overwrite(
@@ -345,53 +340,41 @@ class VersionedTableStore(TableStore):
             updates.write.mode("overwrite").partitionBy(*partition_by).parquet(snap)
             # partitions the write produced = the overwritten set, as Spark
             # encoded them; everything else carries over by hard link
-            self._link_tree(
-                prev, snap, skip_partition_dirs=self._partition_subdirs(snap)
+            replaced = self._partition_subdirs(snap)
+            self._link_files(
+                [
+                    f for f in data_files(prev)
+                    if os.path.relpath(os.path.dirname(f), prev) not in replaced
+                ],
+                prev,
+                snap,
             )
             self._commit(name, rel, "insert_overwrite")
 
-    def _merge_partitioned(
+    def merge(self, updates: DataFrame, name: str, *args, **kwargs) -> dict:
+        # one lock across the touched-file search and the commit: the
+        # files found must still be the current snapshot's when it commits
+        with self._write_lock(name):
+            return super().merge(updates, name, *args, **kwargs)
+
+    def _publish(
         self,
-        updates: DataFrame,
         name: str,
-        unique_key: list[str],
-        partition_by: list[str],
-        incremental_predicates: list[str] | None = None,
-    ) -> None:
-        """Partition-pruned MERGE commit: anti-join only the touched
-        partitions (read from the immutable previous snapshot — no
-        staging detour), write the merged slice into the new snapshot,
-        hard-link the untouched partitions."""
-        updates = updates.persist()
-        try:
-            touched = updates.select(*partition_by).distinct().collect()
-            if not touched:
-                return
-            pred = _touched_partition_predicate(touched, partition_by)
-
-            with self._write_lock(name):
-                prev = self._snap_dir(name, self.current_version(name))
-                old_slice = self.read(name).filter(pred)
-                old_slice, out_scope = _split_merge_scope(
-                    old_slice, incremental_predicates
-                )
-                kept = old_slice.join(
-                    updates.select(*unique_key).distinct(),
-                    on=unique_key,
-                    how="left_anti",
-                )
-                result = kept.unionByName(updates.select(*old_slice.columns))
-                if out_scope is not None:
-                    result = out_scope.unionByName(result)
-
-                rel, snap = self._new_snap(name)
-                result.write.mode("overwrite").partitionBy(*partition_by).parquet(snap)
-                self._link_tree(
-                    prev, snap, skip_partition_dirs=self._partition_subdirs(snap)
-                )
-                self._commit(name, rel, "merge")
-        finally:
-            updates.unpersist()
+        staged: DataFrame,
+        partition_by: list[str] | None,
+        touched: list[str],
+    ) -> dict:
+        """MERGE commit: write the staged files into a new snapshot,
+        hard-link every untouched file of the current one beside them,
+        commit the manifest (the atomic publish)."""
+        prev = self._data_dir(name)
+        rel, snap = self._new_snap(name)
+        _write_table(staged, snap, partition_by)
+        stats = _sink_stats(len(touched), data_files(snap))
+        skip = set(touched)
+        self._link_files([f for f in data_files(prev) if f not in skip], prev, snap)
+        self._commit(name, rel, "merge")
+        return stats
 
     def diff(
         self,
@@ -428,36 +411,9 @@ class VersionedTableStore(TableStore):
 
     # --------------------------------------------------------- maintenance
 
-    def _current_snap(self, name: str) -> str | None:
+    def _data_dir(self, name: str) -> str | None:
         v = self.current_version(name)
-        return self._snap_dir(name, v) if v is not None else None
-
-    def file_count(self, name: str) -> int:
-        snap = self._current_snap(name)
-        if snap is None:
-            return 0
-        total = 0
-        for _root, _dirs, files in os.walk(snap):
-            total += sum(1 for f in files if f.endswith(".parquet"))
-        return total
-
-    def partition_cols(self, name: str) -> list[str]:
-        cols: list[str] = []
-        p = self._current_snap(name)
-        if p is None:
-            return cols
-        while True:
-            subs = [
-                f for f in os.listdir(p)
-                if "=" in f and os.path.isdir(os.path.join(p, f))
-            ]
-            if not subs:
-                return cols
-            cols.append(subs[0].split("=")[0])
-            p = os.path.join(p, subs[0])
-
-    def _has_partition_dirs(self, name: str) -> bool:
-        return bool(self.partition_cols(name))
+        return os.path.abspath(self._snap_dir(name, v)) if v is not None else None
 
     def vacuum(self, name: str, retain_hours: int = 168) -> None:
         """Prune versions past the retention window (reference

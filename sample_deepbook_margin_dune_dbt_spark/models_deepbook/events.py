@@ -9,9 +9,10 @@ expressions (``get_json_object`` + ``try_cast``; no Python in the row path).
 
 Scale notes: the event_type equality filter and the watermark range filter
 are plain column predicates, so Catalyst pushes both into the parquet scan
-(``PushedFilters``) — on a date-partitioned 100 TB events table the watermark
-additionally prunes partitions. The decode itself is a narrow map: no
-shuffle anywhere in these 5 models.
+(``PushedFilters``), and ``ctx.source(..., since_ms=...)`` reads only the
+source files whose footer max reaches the watermark — an incremental run
+scans the new files, not the history. The decode itself is a narrow map:
+no shuffle anywhere in these 5 models.
 """
 
 from __future__ import annotations
@@ -91,15 +92,12 @@ EVENT_SPECS: list[tuple[str, str, list[tuple[str, str, str | None]]]] = [
 
 
 def _build_event_model(ctx: ModelContext, type_suffix: str, fields) -> DataFrame:
-    raw = ctx.source("sui", "events").filter(
+    # watermark (timestamp_ms >= coalesce(max(timestamp_ms), 0) from this)
+    # or, on the first run, the 30-day backfill bound
+    since = ctx.watermark_ms() if ctx.is_incremental() else ctx.backfill_floor_ms()
+    raw = ctx.source("sui", "events", since_ms=since).filter(
         F.col("event_type") == f"{PACKAGE}::{type_suffix}"
     )
-    if ctx.is_incremental():
-        # watermark: timestamp_ms >= coalesce(max(timestamp_ms), 0) from this
-        raw = raw.filter(F.col("timestamp_ms") >= F.lit(ctx.watermark_ms()))
-    else:
-        # initial backfill bound: last 30 days
-        raw = raw.filter(F.col("timestamp_ms") >= F.lit(ctx.backfill_floor_ms()))
 
     cols = [
         F.col("transaction_digest"),

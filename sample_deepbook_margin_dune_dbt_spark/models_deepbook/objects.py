@@ -104,13 +104,10 @@ def _norm_decimals(amount: F.Column, decimals: F.Column) -> F.Column:
     not_null=["object_id", "version"],
 )
 def stg_deepbook_margin_pool_object(ctx: ModelContext) -> DataFrame:
-    raw = ctx.source("sui", "objects").filter(
+    since = ctx.watermark_ms() if ctx.is_incremental() else ctx.backfill_floor_ms()
+    raw = ctx.source("sui", "objects", since_ms=since).filter(
         F.col("type_").like(f"{PACKAGE}::margin_pool::MarginPool<%")
     )
-    if ctx.is_incremental():
-        raw = raw.filter(F.col("timestamp_ms") >= F.lit(ctx.watermark_ms()))
-    else:
-        raw = raw.filter(F.col("timestamp_ms") >= F.lit(ctx.backfill_floor_ms()))
 
     cols = [
         F.col("object_id").cast("string").alias("object_id"),

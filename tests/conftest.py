@@ -48,10 +48,11 @@ def fuzz_examples(deep: int, fast: int) -> int:
     driver's verify window truncated a 39-53 min suite; the expensive
     fuzzers are the sanctioned opt-in tier). Default = ``fast`` so the
     driver-run suite completes; ``SPARK_GRAFT_DEEP_FUZZ=1`` restores the
-    full ``deep`` budget for local hardening runs. The Hypothesis
+    full ``deep`` budget for local hardening runs (unset, empty or ``0``
+    keeps the fast tier). The Hypothesis
     example database still replays every previously-found failure in
     BOTH tiers, so regressions caught once stay caught."""
-    return deep if os.environ.get("SPARK_GRAFT_DEEP_FUZZ") else fast
+    return deep if os.environ.get("SPARK_GRAFT_DEEP_FUZZ", "0") not in ("", "0") else fast
 
 
 @pytest.fixture()

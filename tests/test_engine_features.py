@@ -51,6 +51,126 @@ def test_merge_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
     assert mtime_after == mtime_before
 
 
+def test_merge_unpartitioned_rewrites_only_touched_files(spark, tmp_path):
+    """An unpartitioned MERGE replaces only the files holding a matched
+    key: every other file keeps its inode and mtime, and the sink's
+    counters describe exactly the files it swapped."""
+    store = TableStore(spark, str(tmp_path))
+    base = spark.createDataFrame(
+        [(i, float(i)) for i in range(40)], "id long, v double"
+    ).repartitionByRange(4, "id")
+    store.write_full(base, "t")
+
+    def stat(f):
+        s = os.stat(f)
+        return s.st_ino, s.st_mtime_ns
+
+    before = {f: stat(f) for f in store.data_files("t")}
+    assert len(before) == 4
+    updates = spark.createDataFrame([(3, -3.0), (100, -100.0)], "id long, v double")
+    out = store.merge(updates, "t", unique_key=["id"])
+
+    after = {f: stat(f) for f in store.data_files("t")}
+    gone = set(before) - set(after)
+    added = set(after) - set(before)
+    assert len(gone) == 1, "only the file holding id=3 is touched"
+    assert all(after[f] == before[f] for f in set(before) & set(after))
+    rows = {r["id"]: r["v"] for r in store.read("t").collect()}
+    assert rows == {**{i: float(i) for i in range(40)}, 3: -3.0, 100: -100.0}
+    import pyarrow.parquet as pq
+
+    assert out == {
+        "files_rewritten": 1,
+        "files_added": len(added),
+        "rows_written": sum(pq.read_metadata(f).num_rows for f in added),
+    }
+    # an empty slice is a no-op: nothing read back, nothing written
+    empty = spark.createDataFrame([], "id long, v double")
+    assert store.merge(empty, "t", unique_key=["id"])["files_added"] == 0
+    assert {f: stat(f) for f in store.data_files("t")} == after
+
+
+@pytest.mark.parametrize("case", ["empty", "all_null", "null_partition", "no_stats"])
+def test_footer_probe_equals_spark_max(spark, tmp_path, case):
+    """The footer-statistics probes answer exactly what Spark's ``max``
+    over the table answers — on an empty table, an all-NULL column and a
+    date partition column holding ``__HIVE_DEFAULT_PARTITION__`` — and
+    fall back to the Spark aggregate when a file has no statistics."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sample_deepbook_margin_dune_dbt_spark.engine.model import ModelConfig, ModelContext
+
+    store = TableStore(spark, str(tmp_path))
+    d1, d2 = dt.date(2026, 1, 1), dt.date(2026, 1, 9)
+    schema = "timestamp_ms long, snapshot_date date"
+    rows = {
+        "empty": [],
+        "all_null": [(None, d1), (None, d2)],
+        "null_partition": [(5, d1), (7, None), (6, d2)],
+        "no_stats": [(5, d1), (6, d2)],
+    }[case]
+    store.write_full(
+        spark.createDataFrame(rows, schema),
+        "t",
+        ["snapshot_date"] if case != "all_null" else None,
+    )
+    if case == "no_stats":
+        extra = os.path.join(store.path("t"), "snapshot_date=2026-01-10")
+        os.makedirs(extra)
+        pq.write_table(
+            pa.table({"timestamp_ms": pa.array([9], pa.int64())}),
+            os.path.join(extra, "part-x.parquet"),
+            write_statistics=False,
+        )
+        assert store.column_bounds("t", "timestamp_ms") is None  # falls back
+
+    want = store.read("t").agg(
+        F.max("timestamp_ms").alias("ts"), F.max("snapshot_date").alias("day")
+    ).first()
+    bounds = store.column_bounds("t", "timestamp_ms")
+    if bounds is not None:
+        assert bounds[1] == want["ts"]
+    day_bounds = store.column_bounds("t", "snapshot_date")
+    assert day_bounds is not None and day_bounds[1] == want["day"]
+
+    ctx = ModelContext(spark, store, {}, ModelConfig(name="t", builder=None))
+    assert ctx.watermark_ms() == (want["ts"] or 0)
+    floor = ctx.lookback_floor_date()
+    assert floor == (want["day"] - dt.timedelta(days=7) if want["day"] else None)
+    assert ctx.probes == {
+        "watermark_ms": want["ts"] or 0,
+        "lookback_floor_date": floor.isoformat() if floor else None,
+    }
+
+
+@pytest.mark.parametrize("since_ms", [0, 150, 250, 10_000])
+def test_source_since_ms_prunes_files_not_rows(spark, tmp_path, since_ms):
+    """``ctx.source(..., since_ms=)`` returns exactly the rows of the
+    unpruned ``timestamp_ms >= since_ms`` filter, reading only the files
+    whose footer max reaches the bound (one schema-carrying file when
+    none does)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sample_deepbook_margin_dune_dbt_spark.engine.model import ModelConfig, ModelContext
+
+    src = tmp_path / "events"
+    src.mkdir()
+    for day, (lo, hi) in enumerate([(0, 99), (100, 199), (200, 299)]):
+        ts = list(range(lo, hi + 1, 7)) + [None]
+        pq.write_table(
+            pa.table({"timestamp_ms": pa.array(ts, pa.int64()), "day": [day] * len(ts)}),
+            str(src / f"day-{day}.parquet"),
+        )
+    ctx = ModelContext(spark, None, {"sui.events": str(src)}, ModelConfig(name="m", builder=None))
+    got = ctx.source("sui", "events", since_ms=since_ms)
+    want = spark.read.parquet(str(src)).filter(F.col("timestamp_ms") >= since_ms)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    reaching = {0: 3, 150: 2, 250: 1, 10_000: 1}[since_ms]
+    assert len(got.inputFiles()) == reaching
+
+
 def test_optimize_compacts_files(spark, tmp_path):
     store = TableStore(spark, str(tmp_path))
     df = spark.range(0, 10000).repartition(16).withColumn("v", F.rand(seed=1))
@@ -528,15 +648,48 @@ def test_run_results_artifact(spark, tmp_path):
     def rr_boom(ctx):
         raise RuntimeError("kaput")
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    @model("rr_inc", unique_key=["k"])
+    def rr_inc(ctx):
+        since = ctx.watermark_ms() if ctx.is_incremental() else 0
+        return ctx.source("s", "ev", since_ms=since).select("k", "timestamp_ms")
+
     try:
+        src = tmp_path / "ev"
+        src.mkdir()
+        for part in range(3):
+            ks = [part * 10 + i for i in range(10)]
+            pq.write_table(
+                pa.table({"k": ks, "timestamp_ms": [1000 * part + i for i in range(10)]}),
+                str(src / f"p{part}.parquet"),
+            )
         store = TableStore(spark, str(tmp_path / "wh"))
-        runner = Runner(spark, store, {})
+        runner = Runner(spark, store, {"s.ev": str(src)})
         runner.run("rr_ok")
         art = json.load(open(store.path("_artifacts") + "/run_results.json"))
         assert art["results"][0]["model"] == "rr_ok"
         assert art["results"][0]["status"] == "success"
         assert art["results"][0]["execution_time_s"] >= 0
         assert art["full_refresh"] is False
+
+        # an incremental model's row carries the probed watermark and the
+        # sink counters of its write; a re-run's MERGE re-upserts the row at
+        # the watermark, swapping exactly the file that held it
+        runner.run("rr_inc")
+        first = json.load(open(store.path("_artifacts") + "/run_results.json"))
+        first = first["results"][0]
+        assert first["rows_written"] == 30 and first["files_rewritten"] == 0
+        before = set(store.data_files("rr_inc"))
+        runner.run("rr_inc")
+        row = json.load(open(store.path("_artifacts") + "/run_results.json"))["results"][0]
+        after = set(store.data_files("rr_inc"))
+        assert row["watermark_ms"] == 2009
+        assert row["files_rewritten"] == len(before - after) == 1
+        assert row["files_added"] == len(after - before)
+        assert row["rows_written"] == sum(pq.read_metadata(f).num_rows for f in after - before)
+        assert store.read("rr_inc").count() == 30
 
         with pytest.raises(RuntimeError, match="kaput"):
             runner.run(["rr_ok", "rr_boom"])
@@ -547,6 +700,7 @@ def test_run_results_artifact(spark, tmp_path):
     finally:
         _REGISTRY.pop("rr_ok", None)
         _REGISTRY.pop("rr_boom", None)
+        _REGISTRY.pop("rr_inc", None)
 
 
 def test_merge_sync_all_columns(spark, tmp_path):

@@ -11,7 +11,7 @@ import re
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from tests.conftest import fuzz_examples
 from pyspark.sql import functions as F
@@ -464,15 +464,25 @@ _OPS = st.lists(
 
 
 @settings(max_examples=fuzz_examples(6, 3), deadline=None)
-@given(_OPS)
+@given(_OPS, st.sampled_from([["day"], None]))
+# the unpartitioned layout is always sampled at least once
+@example(
+    ops=[
+        ("merge", [(1, 1, "d1"), (2, 2, None)]),
+        ("append", [(3, 3, "d2")]),
+        ("merge", [(1, 5, "d2"), (4, 4, "d1")]),
+    ],
+    part=None,
+)
 def test_versioned_store_equals_plain_under_random_interleavings(
-    spark, tmp_path_factory, ops
+    spark, tmp_path_factory, ops, part
 ):
     """VERDICT r10 item 8: for ANY interleaving of merge / append /
-    insert_overwrite / vacuum over a partitioned table (null partition
-    values included), the versioned store's CURRENT content equals the
-    plain store's after every step, every committed version remains
-    readable, and ops/labels are consistent."""
+    insert_overwrite / vacuum over a partitioned or unpartitioned table
+    (null partition values included), the versioned store's CURRENT
+    content equals the plain store's after every step, every committed
+    version remains readable, and ops/labels are consistent. On the
+    unpartitioned layout insert_overwrite (partition-only) is a merge."""
     import tempfile
 
     from sample_deepbook_margin_dune_dbt_spark.engine import (
@@ -492,19 +502,21 @@ def test_versioned_store_equals_plain_under_random_interleavings(
     seeded = False
     for op, rows in ops:
         d = df(rows)
+        if op == "insert_overwrite" and part is None:
+            op = "merge"
         if op == "merge":
-            plain.merge(d, "t", ["k"], partition_by=["day"])
-            vers.merge(d, "t", ["k"], partition_by=["day"])
+            plain.merge(d, "t", ["k"], partition_by=part)
+            vers.merge(d, "t", ["k"], partition_by=part)
         elif op == "append":
             if not seeded:  # append before create == create
-                plain.write_full(d, "t", ["day"])
-                vers.write_full(d, "t", ["day"])
+                plain.write_full(d, "t", part)
+                vers.write_full(d, "t", part)
             else:
-                plain.append(d, "t", ["day"])
-                vers.append(d, "t", ["day"])
+                plain.append(d, "t", part)
+                vers.append(d, "t", part)
         elif op == "insert_overwrite":
-            plain.insert_overwrite(d, "t", ["day"])
-            vers.insert_overwrite(d, "t", ["day"])
+            plain.insert_overwrite(d, "t", part)
+            vers.insert_overwrite(d, "t", part)
         else:  # vacuum: retention must never change current content
             plain.vacuum("t")
             vers.vacuum("t", retain_hours=0)
